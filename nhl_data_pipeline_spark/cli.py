@@ -19,6 +19,7 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+from collections import Counter
 
 BRONZE_TABLES = ("game_boxscore", "game_pbp", "schedule", "odds_player_props")
 DEFAULT_BRONZE = os.path.join(
@@ -69,11 +70,14 @@ def main(argv: list[str] | None = None) -> int:
         t: spark.read.parquet(os.path.join(args.bronze, t))
         for t in BRONZE_TABLES
     }
-    models = run_pipeline(
+    result = run_pipeline(
         spark, bronze, warehouse_dir=args.warehouse, as_of=args.as_of
-    ).models
-    print(f"built {len(models)} models"
-          + (f" (tables under {args.warehouse})" if args.warehouse else ""))
+    )
+    models = result.models
+    n = Counter(r.status for r in result.stages.values())
+    print(f"built {len(models)} models ({n['built']} built,"
+          f" {n['skipped']} skipped, {n['view']} views)"
+          + (f"; tables under {args.warehouse}" if args.warehouse else ""))
 
     rc = 0
     if not args.skip_quality:

@@ -1,80 +1,176 @@
-"""Pipeline driver: materialize the model DAG in dependency order.
+"""The NHL model DAG: 24 stages run by :class:`pipeline.Pipeline`.
 
 Replaces the reference's Airflow→Snowflake→dbt chain (SURVEY §3.1) with one
-Spark job: bronze readers → staging views → silver tables → metric views.
-The dbt view/table policy (dbt_project.yml:19-33) maps to: views = lazy
-DataFrames registered as temp views; tables = parquet materializations
-under a warehouse dir. Model dependency order is plain call order.
+Spark job: bronze readers → staging → silver tables → metric views. Each
+stage declares its materialization the way a dbt model declares
+``materialized=`` (dbt_project.yml:19-33):
+
+- staging and dims: plain parquet tables. The reference declares staging
+  as views, but a staging view re-runs its bronze JSON parse and
+  latest-snapshot window once per consuming table (stg_games feeds five),
+  so with a warehouse it is written once and re-read — same rows, same
+  quality-suite results;
+- facts: tables partitioned by season (:func:`_season_table`), the lake
+  layout that gives season-scoped queries partition pruning at 100 TB;
+  ``fact_shot_events`` is Hilbert-clustered instead
+  (:func:`_hilbert_shots`); the odds fact has no season column and is a
+  plain table;
+- metrics and the Bruins extracts: views.
+
+Without a warehouse every stage is a lazy view, so the whole DAG is one
+plan (nhl_pipeline_e2e), where AQE reuse covers the shared subtrees.
+Stage fns look builders up on their modules at call time, so wrapping a
+module attribute (per-model tracing) reaches the run.
 """
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from nhl_data_pipeline_spark.nhl import dims, facts, metrics, odds, staging
+from nhl_data_pipeline_spark.pipeline import (
+    Pipeline,
+    Stage,
+    StageResult,
+    source_identity,
+    write_parquet,
+)
+from nhl_data_pipeline_spark.sources.layout import write_zordered
 
 
 @dataclass
 class PipelineResult:
-    models: dict[str, DataFrame] = field(default_factory=dict)
+    stages: dict[str, StageResult]
+
+    @property
+    def models(self) -> dict[str, DataFrame]:
+        return {name: r.df for name, r in self.stages.items()}
 
     def __getitem__(self, name: str) -> DataFrame:
-        return self.models[name]
+        return self.stages[name].df
 
 
-# dbt materialization policy (dbt_project.yml:19-33): staging/metric = view,
-# dims/facts = table. Fact tables partition by season — the lake layout that
-# gives season-scoped queries partition pruning at 100 TB (mirrors the
-# reference's date=/market= identity partitions, SURVEY §4).
-TABLE_MODELS: dict[str, tuple[str, ...]] = {
-    "dim_date": (),
-    "dim_team": (),
-    "dim_player": (),
-    "fact_game_results": ("season",),
-    "fact_player_game_stats": ("season",),
-    "fact_team_game_stats": ("season",),
-    "fact_player_sog_props_v2": (),  # odds grain has no season column
-}
+def _season_table(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").partitionBy("season").parquet(path)
 
-# Materialize-once staging policy (r13, VERDICT r12 ask #6; guide §2.4).
-# The dbt reference declares staging models as VIEWS, and this runner
-# mirrored that literally: every consumer of a staging view re-executed
-# its whole subtree — the bronze JSON parse, the payload flatten, and the
-# latest-snapshot dedup WINDOW — once per downstream model action.
-# stg_games alone feeds five materialized models (dim_date, dim_team,
-# fact_game_results, fact_team_game_stats, fact_player_sog_props_v2), so
-# a warehouse build parsed and re-deduped the boxscore bronze five times.
-# When the run HAS a warehouse (warehouse_dir set — the only mode where
-# models execute more than once), staging models are now written once as
-# parquet tables and re-read, exactly like dbt's materialized='table'
-# escape hatch for hot views. Same rows, same values (measured: the
-# x100-lake DAG probe's model counts and the 233-check reference quality
-# suite are unchanged); the view policy still holds for the
-# warehouse-less path (nhl_pipeline_e2e's single-action plan, where AQE
-# reuse handles the shared subtrees and nothing executes twice).
-MATERIALIZE_ONCE_STAGING: tuple[str, ...] = (
-    "stg_games",
-    "stg_player_game_stats",
-    "stg_schedule_games",
-    "stg_odds_player_props",
-)
 
-# Multi-column file clustering for the analyst access pattern: the shot
-# worksheet's per-team recency queries filter (team_id, game_date)
-# together (team_shot_example_queries.sql:96-124), which season
-# partitioning alone can't prune. fact_shot_events is written
-# Hilbert-clustered on those two columns (sources/layout.py — measured
-# footer-stat pruning in its module docstring) INSTEAD of the season
-# directory partitioning: the game_date bounding boxes subsume season
-# pruning (a season is a date range), and every file gets a tight 2-D
-# (team, date) box. game_date is projected to epoch days for the binning
-# (dates don't min-max scale); the derived key is dropped before write.
-ZORDER_MODELS: dict[str, dict] = {
-    "fact_shot_events": {"x": "team_id", "date_col": "game_date"},
-}
+def _hilbert_shots(df: DataFrame, path: str) -> None:
+    """Multi-column file clustering for the analyst access pattern: the
+    shot worksheet's per-team recency queries filter (team_id, game_date)
+    together (team_shot_example_queries.sql:96-124), which season
+    partitioning alone can't prune. The game_date bounding boxes subsume
+    season pruning (a season is a date range), and every file gets a
+    tight 2-D (team, date) box (sources/layout.py; pruning asserted in
+    tests/test_layout.py). game_date is projected to epoch days for the
+    binning (dates don't min-max scale); the derived key is dropped
+    before write."""
+    staged = df.withColumn(
+        "_zd_days",
+        F.datediff(F.col("game_date"), F.lit("1970-01-01").cast("date")),
+    )
+    write_zordered(
+        staged,
+        path,
+        ["team_id", "_zd_days"],
+        bits=8,
+        n_files=16,
+        curve="hilbert",
+        drop=["_zd_days"],
+    )
+
+
+def _model(module, name: str, *deps: str, write=None, **kw) -> Stage:
+    """Stage ``name`` = ``module.<name>(*deps, **kw)`` over its deps'
+    frames; a view unless ``write`` is given."""
+    return Stage(
+        name,
+        lambda _, m: getattr(module, name)(*(m[d] for d in deps), **kw),
+        deps=deps,
+        write=write,
+    )
+
+
+def _stages(bronze: dict[str, DataFrame], as_of: str) -> list[Stage]:
+    """The model DAG in run order. Versions: a stage reading bronze
+    carries that table's identity (None for an in-memory frame: always
+    rebuilt); the two stages reading ``as_of`` carry it."""
+    src = {t: source_identity(df) for t, df in bronze.items()}
+
+    def staged(name: str, table: str) -> Stage:
+        return Stage(
+            name,
+            lambda _, m: getattr(staging, name)(bronze[table]),
+            version=src[table],
+        )
+
+    return [
+        staged("stg_games", "game_boxscore"),
+        staged("stg_player_game_stats", "game_boxscore"),
+        staged("stg_schedule_games", "schedule"),
+        staged("stg_odds_player_props", "odds_player_props"),
+        # dims (dim_date reads observed game dates for its is_game_day /
+        # games_on_date indicators — dim_date.sql:31-38 — and the
+        # injected as-of date for its relative flags)
+        Stage(
+            "dim_date",
+            lambda spark, m: dims.dim_date(
+                spark, game_dates=m["stg_games"].select("game_date"), today=as_of
+            ),
+            deps=("stg_games",),
+            version=as_of,
+        ),
+        _model(dims, "dim_team", "stg_games", write=write_parquet),
+        Stage(
+            "dim_player",
+            lambda _, m: dims.dim_player(
+                m["stg_player_game_stats"], today=as_of, dim_team=m["dim_team"]
+            ),
+            deps=("stg_player_game_stats", "dim_team"),
+            version=as_of,
+        ),
+        # facts
+        _model(facts, "fact_game_results", "stg_games", write=_season_table),
+        _model(facts, "fact_player_game_stats", "stg_player_game_stats",
+               "dim_player", "dim_team", write=_season_table),
+        _model(facts, "fact_team_game_stats", "fact_player_game_stats",
+               "stg_games", write=_season_table),
+        # odds vertical
+        _model(odds, "stg_player_name_crosswalk", "stg_odds_player_props",
+               "dim_player"),
+        _model(odds, "fact_player_sog_props_v2", "stg_odds_player_props",
+               "stg_player_name_crosswalk", "fact_player_game_stats",
+               "stg_games", write=write_parquet),
+        _model(odds, "rpt_sog_props_performance", "fact_player_sog_props_v2"),
+        Stage(
+            "fact_shot_events",
+            lambda _, m: facts.fact_shot_events(
+                bronze["game_pbp"], m["dim_player"]
+            ),
+            deps=("dim_player",),
+            version=src["game_pbp"],
+            write=_hilbert_shots,
+        ),
+        # metrics
+        _model(metrics, "team_shot_metrics", "fact_team_game_stats"),
+        _model(metrics, "player_shot_metrics", "fact_player_game_stats"),
+        _model(metrics, "team_shots_against_by_position",
+               "fact_player_game_stats", "fact_team_game_stats", "dim_team"),
+        _model(metrics, "team_shot_locations", "fact_shot_events", "dim_team"),
+        _model(metrics, "player_shot_locations", "fact_shot_events",
+               "dim_team"),
+        _model(metrics, "bruins_next_opponent", "stg_schedule_games",
+               "dim_team", today="2024-11-13"),
+        # Bruins-filtered Tableau extracts (bruins_*.sql — the Sheets row cap)
+        _model(metrics, "bruins_team_shot_locations", "team_shot_locations"),
+        _model(metrics, "bruins_player_shot_locations",
+               "player_shot_locations"),
+        _model(metrics, "bruins_shot_events", "fact_shot_events", "dim_team"),
+        _model(metrics, "bruins_opponent_shot_locations",
+               "team_shot_locations", "bruins_next_opponent"),
+    ]
 
 
 def run_pipeline(
@@ -86,10 +182,11 @@ def run_pipeline(
     """Execute the full model DAG from bronze snapshot DataFrames.
 
     bronze keys: game_boxscore, game_pbp, schedule, odds_player_props.
-    When warehouse_dir is set, table-policy models are written as parquet
-    and re-read (mirroring dbt `materialized='table'`); every model is also
-    registered as a temp view so the analyst SQL corpus (SURVEY §3.2) runs
-    via spark.sql unchanged.
+    When warehouse_dir is set, table stages are written there as parquet
+    and re-read (mirroring dbt `materialized='table'`); clean tables from
+    an earlier run are skipped. Every model is also registered as a temp
+    view so the analyst SQL corpus (SURVEY §3.2) runs via spark.sql
+    unchanged.
     """
     # Shared-session hygiene (VERDICT r9 "what's wrong" #2): this runner
     # executes 24+ models on one session — restore the default scan-split
@@ -97,112 +194,7 @@ def run_pipeline(
     from nhl_data_pipeline_spark.catalog import reset_scan_splits
 
     reset_scan_splits(spark)
-    r = PipelineResult()
-
-    def emit(name: str, df: DataFrame) -> DataFrame:
-        if warehouse_dir and name in ZORDER_MODELS:
-            from pyspark.sql import functions as F
-
-            from nhl_data_pipeline_spark.sources.layout import write_zordered
-
-            spec = ZORDER_MODELS[name]
-            path = os.path.join(warehouse_dir, name)
-            staged = df.withColumn(
-                "_zd_days",
-                F.datediff(
-                    F.col(spec["date_col"]), F.lit("1970-01-01").cast("date")
-                ),
-            )
-            write_zordered(
-                staged,
-                path,
-                [spec["x"], "_zd_days"],
-                bits=8,
-                n_files=16,
-                curve="hilbert",
-                drop=["_zd_days"],
-            )
-            df = spark.read.parquet(path)
-        elif warehouse_dir and (
-            name in TABLE_MODELS or name in MATERIALIZE_ONCE_STAGING
-        ):
-            path = os.path.join(warehouse_dir, name)
-            writer = df.write.mode("overwrite")
-            parts = TABLE_MODELS.get(name, ())
-            if parts:
-                writer = writer.partitionBy(*parts)
-            writer.parquet(path)
-            df = spark.read.parquet(path)
-        df.createOrReplaceTempView(name)
-        r.models[name] = df
-        return df
-
-    # staging
-    stg_games = emit("stg_games", staging.stg_games(bronze["game_boxscore"]))
-    stg_pgs = emit(
-        "stg_player_game_stats", staging.stg_player_game_stats(bronze["game_boxscore"])
-    )
-    stg_sched = emit("stg_schedule_games", staging.stg_schedule_games(bronze["schedule"]))
-    stg_odds = emit(
-        "stg_odds_player_props", staging.stg_odds_player_props(bronze["odds_player_props"])
-    )
-
-    # dims (dim_date reads observed game dates for its is_game_day /
-    # games_on_date indicators — dim_date.sql:31-38 — and the injected
-    # as-of date for its relative flags)
-    dim_date = emit(
-        "dim_date",
-        dims.dim_date(
-            spark, game_dates=stg_games.select("game_date"), today=as_of
-        ),
-    )
-    dim_team = emit("dim_team", dims.dim_team(stg_games))
-    dim_player = emit(
-        "dim_player", dims.dim_player(stg_pgs, today=as_of, dim_team=dim_team)
-    )
-
-    # facts
-    fgr = emit("fact_game_results", facts.fact_game_results(stg_games))
-    fpgs = emit(
-        "fact_player_game_stats",
-        facts.fact_player_game_stats(stg_pgs, dim_player, dim_team),
-    )
-    ftgs = emit("fact_team_game_stats", facts.fact_team_game_stats(fpgs, stg_games))
-    fse = emit("fact_shot_events", facts.fact_shot_events(bronze["game_pbp"], dim_player))
-
-    # metrics
-    emit("team_shot_metrics", metrics.team_shot_metrics(ftgs))
-    emit("player_shot_metrics", metrics.player_shot_metrics(fpgs))
-    emit(
-        "team_shots_against_by_position",
-        metrics.team_shots_against_by_position(fpgs, ftgs, dim_team),
-    )
-    tsl = emit("team_shot_locations", metrics.team_shot_locations(fse, dim_team))
-    psl = emit("player_shot_locations", metrics.player_shot_locations(fse, dim_team))
-    bno = emit(
-        "bruins_next_opponent",
-        metrics.bruins_next_opponent(stg_sched, dim_team, today="2024-11-13"),
-    )
-
-    # Bruins-filtered Tableau extracts (bruins_*.sql — the Sheets row cap)
-    emit("bruins_team_shot_locations", metrics.bruins_team_shot_locations(tsl))
-    emit("bruins_player_shot_locations", metrics.bruins_player_shot_locations(psl))
-    emit("bruins_shot_events", metrics.bruins_shot_events(fse, dim_team))
-    emit(
-        "bruins_opponent_shot_locations",
-        metrics.bruins_opponent_shot_locations(tsl, bno),
-    )
-
-    # odds vertical
-    xw = emit(
-        "stg_player_name_crosswalk",
-        odds.stg_player_name_crosswalk(stg_odds, dim_player),
-    )
-    props = emit(
-        "fact_player_sog_props_v2",
-        odds.fact_player_sog_props_v2(stg_odds, xw, fpgs, stg_games),
-    )
-    emit("rpt_sog_props_performance", odds.rpt_sog_props_performance(props))
-
-    _ = dim_date, fgr  # registered views; referenced via SQL corpus
-    return r
+    stages = Pipeline(_stages(bronze, as_of)).run(spark, warehouse_dir)
+    for name, r in stages.items():
+        r.df.createOrReplaceTempView(name)
+    return PipelineResult(stages)

@@ -9,15 +9,15 @@ the prose.
 
 Scale shape (100 TB):
 1. explode docs to (doc_id, pos, line) — pure codegen, no Python;
-2. line frequency = one map-side-combinable groupBy on the line (carry an
-   xxhash64 of the line instead of the string to move 8-byte shuffle keys
-   when lines are long);
+2. line frequency = one map-side-combinable groupBy on xxhash64(line), so
+   every shuffle key is an 8-byte long, never the line string;
 3. the frequent-line set is SMALL by construction (boilerplate ⇒ repeated
-   ⇒ few distinct strings), so it broadcast-anti-joins against the
-   exploded lines — the corpus-sized side never shuffles for the filter;
-4. reassembly is one groupBy(doc_id) with an order-restoring
-   sort_array(collect_list(struct(pos, line))) — the only corpus-sized
-   shuffle in the plan.
+   ⇒ few distinct strings), so it collapses to one row holding
+   collect_set(hash) that is broadcast to every document;
+4. each document strips itself with a per-row array filter against that
+   set and re-concatenates its lines — order is preserved by the filter,
+   and the corpus-sized side never shuffles (no anti-join, no reassembly
+   aggregate).
 
 Reference analog: the staging dedup of repeated payload snapshots
 (`dbt_nhl/models/staging/stg_games.sql:32` latest-snapshot ROW_NUMBER

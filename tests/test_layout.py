@@ -147,10 +147,11 @@ def test_ivf_centroid_partitioned_layout_prunes(spark, tmp_path):
 
 
 def test_fact_shot_events_hilbert_layout_prunes(spark, tmp_path):
-    """The NHL lake writer's Hilbert layout (pipeline.ZORDER_MODELS) must
-    make the worksheet's two-column access pattern — one team over a date
-    window (team_shot_example_queries.sql:96-124) — a file-pruned scan:
-    footer stats alone must exclude >50% of the files."""
+    """The NHL lake writer's Hilbert layout (the fact_shot_events
+    stage's writer, nhl/pipeline.py::_hilbert_shots) must make the
+    worksheet's two-column access pattern — one team over a date window
+    (team_shot_example_queries.sql:96-124) — a file-pruned scan: footer
+    stats alone must exclude >50% of the files."""
     from nhl_data_pipeline_spark.nhl import fixtures
     from nhl_data_pipeline_spark.nhl.pipeline import run_pipeline
 

@@ -107,3 +107,33 @@ def test_cycles_and_unknown_deps_rejected(spark):
         Pipeline([Stage("a", f, deps=("nope",))])
     with pytest.raises(ValueError, match="duplicate"):
         Pipeline([Stage("a", f), Stage("a", f)])
+
+
+def test_views_and_unversioned_stages(spark, tmp_path):
+    """A stage with no writer is a lazy view over its deps' frames (no
+    files, status 'view'); with no root every stage is a view; a stage
+    whose version is None rebuilds on every run, and so does its cone."""
+    root = str(tmp_path / "lake")
+    p = _mini_dag()
+    view = Pipeline(
+        [
+            Stage("bronze_orders", p.stages[1].fn, version=None),
+            Stage("stg_orders", p.stages[2].fn, deps=("bronze_orders",)),
+            Stage("fact_revenue", p.stages[0].fn, deps=("stg_orders",),
+                  write=None),
+        ]
+    )
+    r1 = view.run(spark, root)
+    assert {k: v.status for k, v in r1.items()} == {
+        "bronze_orders": "built",
+        "stg_orders": "built",
+        "fact_revenue": "view",
+    }
+    assert not (Path(root) / "fact_revenue").exists()
+    assert r1["fact_revenue"].df.count() == p.run(spark, None)[
+        "fact_revenue"
+    ].df.count()
+    r2 = view.run(spark, root)
+    assert r2["bronze_orders"].status == "built"
+    assert r2["stg_orders"].status == "built"
+    assert all(v.status == "view" for v in p.run(spark, None).values())
